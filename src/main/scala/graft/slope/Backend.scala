@@ -22,6 +22,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Pass results are sums over rows, so a distributed `treeAggregate`
   * and a local loop produce the same quantities (up to FP reorder).
+  * [[RowFoldBackend]] writes every pass once; its two subclasses differ
+  * only in how they fold the rows.
   */
 trait SlopeBackend {
   def n: Long
@@ -33,8 +35,8 @@ trait SlopeBackend {
   /** Per-feature raw means (for centering, length pRaw) plus whether any
     * row uses a sparse representation — detected exactly in the same
     * aggregate (not a sample), since the flag steers the centering
-    * default. This pass also validates per-row vector lengths, so the
-    * later fused kernels can assume well-shaped rows. */
+    * default. Row lengths are validated at ingest (`Slope.fit`'s row
+    * mapper, `fitLocal`), so every pass can assume well-shaped rows. */
   def featureMeansAndSparsity(): (Array[Double], Boolean)
 
   /** Scale statistic per feature given centers (0s if no centering):
@@ -62,21 +64,14 @@ trait SlopeBackend {
 
   /** Fused TWO-POINT pass for the speculative FISTA step: primal at
     * the line-search candidate `candActive` PLUS the full
-    * (primal, dual, gradient) at the momentum point `nextActive`, so
-    * the accepted-step case costs ONE data scan per pass instead of
-    * two. Values are identical to composing [[primalActive]] +
-    * [[evalActive]] (each accumulator sums the same per-row terms in
-    * the same order); the default does exactly that — distributed
-    * backends override with one fused aggregation.
+    * (primal, dual, gradient) at the momentum point `nextActive`, in
+    * ONE data scan. Values equal composing [[primalActive]] +
+    * [[evalActive]]: each accumulator sums the same per-row terms in
+    * the same chunk and merge order.
     * Returns (gCand, gNext, dualNext, gradNext). */
   def evalPairActive(active: Array[Int], candActive: Array[Double],
                      nextActive: Array[Double], family: Family)
-    : (Double, Double, Double, Array[Double]) = {
-    val gCand = primalActive(active, candActive, family)
-    val (gNext, dualNext, gradNext) =
-      evalActive(active, nextActive, family, needDual = true, needGrad = true)
-    (gCand, gNext, dualNext, gradNext)
-  }
+    : (Double, Double, Double, Array[Double])
 
   /** Gram matrix of standardized active columns (|a| x |a|, column-major)
     * and Xs_active^T y (|a| x m). One pass; |a| must be driver-sized. */
@@ -95,6 +90,25 @@ trait SlopeBackend {
 }
 
 private[slope] object BackendKernels extends Serializable {
+
+  /** Fresh pass accumulator: slots before `maxFrom` are sums (start at
+    * 0), slots from `maxFrom` on are maxima (start at -inf). */
+  def zeroBuf(len: Int, maxFrom: Int): Array[Double] = {
+    val b = new Array[Double](len)
+    if (maxFrom < len) java.util.Arrays.fill(b, maxFrom, len, Double.NegativeInfinity)
+    b
+  }
+
+  /** Merge a partial accumulator into `into` (see [[zeroBuf]]). */
+  def mergeBuf(into: Array[Double], from: Array[Double], maxFrom: Int): Array[Double] = {
+    var i = 0
+    while (i < into.length) {
+      if (i < maxFrom) into(i) += from(i)
+      else if (from(i) > into(i)) into(i) = from(i)
+      i += 1
+    }
+    into
+  }
 
   /** lp_k = b_k + sum_j w_jk x_j computed over nnz only. */
   def linPred(x: Vector, w: Array[Array[Double]], b: Array[Double],
@@ -267,336 +281,196 @@ private[slope] object BackendKernels extends Serializable {
   }
 }
 
-/** Distributed backend over an RDD of (features, preprocessed labels).
-  * All passes are single `treeAggregate`s (depth 2) with broadcast
-  * coefficient state — the MLlib pattern (cf. Spark's
-  * `LeastSquaresAggregator`). Designed so a 1000-executor cluster does
-  * one shuffle-free map + tree reduction per solver pass.
-  */
-class DistributedBackend(
-    rowsIn: RDD[(Vector, Array[Double])],
-    val pRaw: Int,
-    val m: Int,
-    val fitIntercept: Boolean,
-    treeDepth: Int = 2,
-    knownN: Long = -1L) extends SlopeBackend {
+/** Every pass written once. A pass is a per-row update into a flat
+  * accumulator plus a driver-side finish; a subclass supplies the row
+  * storage and [[fold]] — a local chunk loop or one Spark job — and
+  * nothing else. */
+abstract class RowFoldBackend extends SlopeBackend {
 
-  // Size-aware task sizing: every solver pass is ONE treeAggregate job
-  // over these rows, so the pass wall time is (rows-per-task x per-row
-  // kernel cost) + the per-job floor. Two failure modes, both measured
-  // on the bench box (r17 optimization round, guide §2.5):
-  //  - too MANY near-empty tasks: a small fit forced down the
-  //    distributed path pays ~110 ms/job of launch + collection when
-  //    the pass runs 32 near-empty tasks (PERF_DISTRIBUTED.md) —
-  //    COALESCE down to the work-derived width (narrow, no shuffle);
-  //  - too FEW tasks: a sub-128MB parquet scan arrives as 1-3 splits,
-  //    so every one of the path's hundreds of sequential passes ran on
-  //    3 of 32 cores (150-380 ms/pass at sf0.1, QueryProfile r17) —
-  //    REPARTITION up to the same work-derived width (one shuffle of
-  //    the training rows, amortized over every solver pass).
-  // The width derives from WORK (feature cells), never from a core
-  // constant: ~100k cells/task (the exp/log-heavy non-gaussian row
-  // kernels run ~0.25 us/cell, so a task is ~25 ms of compute — the
-  // DistPartProbe sweep over {3, 8, 16, 32, 64} widths at sf0.1 put
-  // the minimum at 16-32), capped by the cluster's defaultParallelism
-  // — growing past the core count adds scheduling overhead with no
-  // concurrency. At 100-TB scale cells/100k far exceeds both the scan
-  // layout and the core count, so the policy only ever coalesces
-  // there (the pre-r17 behavior).
-  // Inputs with no prior count (knownN < 0) keep their layout: sizing
-  // is not worth an extra full pass.
-  val rows: RDD[(Vector, Array[Double])] = {
-    val sized =
-      if (knownN < 0) rowsIn
-      else {
-        val cells = knownN.toDouble * math.max(1, pRaw) * math.max(1, m)
-        val target0 = math.min(
-          math.max(8, math.ceil(cells / 1e5).toLong),
-          rowsIn.sparkContext.defaultParallelism.toLong).toInt
-        // probe override (DistPartProbe): 0 = keep the input layout
-        val target = sys.props.get("graft.slope.distPartitionsOverride")
-          .map(_.toInt).filter(_ >= 0).getOrElse(target0)
-        val parts = rowsIn.getNumPartitions
-        if (target == 0 || target == parts) rowsIn
-        else if (target < parts) rowsIn.coalesce(target)
-        // growing costs a full shuffle of the training rows — pay it
-        // only when it at least DOUBLES the pass parallelism (the
-        // 3-split case it exists for), never to fine-tune an already
-        // -wide layout (measured at the 10x frame: repartition 30→32
-        // shuffled ~1 GB to gain 2 tasks and LOST ~6 s to the shuffle
-        // + GC)
-        else if (target >= 2 * parts) rowsIn.repartition(target)
-        else rowsIn
-      }
-    sized
-  }
+  /** Per-row update `(accumulator, x, y)`. */
+  protected type RowFn = (Array[Double], Vector, Array[Double]) => Unit
 
-  rows.persist(StorageLevel.MEMORY_AND_DISK)
+  /** Fold every row into a `len`-slot accumulator (see
+    * [[BackendKernels.zeroBuf]] for `maxFrom`) and merge the partials.
+    * `newRow()` runs once per chunk or partition, so the scratch its
+    * row function closes over is private to one sequential scan.
+    * `chunked = false` keeps a driver-resident fold to ONE sequential
+    * scan: the set-up passes pin their FP summation order that way, so
+    * the standardization every fit builds on never moves; the solver
+    * passes (eval, pair, Gram) may split into parallel chunks. The row
+    * function must not capture the backend: the distributed fold ships
+    * it to executors. */
+  protected def fold(len: Int, chunked: Boolean, maxFrom: Int = Int.MaxValue)(
+      newRow: () => RowFn): Array[Double]
 
-  // shallow trees for small fan-in: depth 2 inserts an extra stage per
-  // job; with <= 64 tiny partials the driver combine is faster than a
-  // scheduled intermediate stage
-  private val effDepth =
-    if (rows.getNumPartitions <= 64) 1 else treeDepth
-  // callers that already counted (Slope.fit does, for the backend
-  // decision) pass n in — saves a full scan per fit
-  lazy val n: Long = if (knownN >= 0) knownN else rows.count()
-
-  private var xCenter: Array[Double] = new Array[Double](pInt)
-  private var xScale: Array[Double] = Array.fill(pInt)(1.0)
+  protected var xCenter: Array[Double] = new Array[Double](pInt)
+  protected var xScale: Array[Double] = Array.fill(pInt)(1.0)
   def setStandardization(c: Array[Double], s: Array[Double]): Unit = {
     xCenter = c; xScale = s
   }
 
-  private def sc = rows.sparkContext
-
   def featureMeansAndSparsity(): (Array[Double], Boolean) = {
     val p = pRaw
-    val (sum, cnt, sparse) = rows.treeAggregate(
-      (new Array[Double](p), 0L, false))(
-      seqOp = { case ((acc, c, sp), (x, _)) =>
-        // row shapes were validated at ingest (Slope.fit's row mapper)
-        x.foreachActive((j, v) => acc(j) += v)
-        (acc, c + 1, sp || x.isInstanceOf[SparseVector])
-      },
-      combOp = { case ((a1, c1, s1), (a2, c2, s2)) =>
-        var j = 0; while (j < p) { a1(j) += a2(j); j += 1 }
-        (a1, c1 + c2, s1 || s2)
-      }, depth = effDepth)
-    (sum.map(_ / cnt), sparse)
+    // buffer: [sum(p), rows, sparse rows]
+    val res = fold(p + 2, chunked = false) { () => (buf, x, _) =>
+      x.foreachActive((j, v) => buf(j) += v)
+      buf(p) += 1.0
+      if (x.isInstanceOf[SparseVector]) buf(p + 1) += 1.0
+    }
+    (Array.tabulate(p)(j => res(j) / res(p)), res(p + 1) > 0.0)
   }
 
   def scaleStats(center: Array[Double], scale: String): Array[Double] = {
     val p = pRaw
-    val bc = sc.broadcast(center)
     scale match {
       case "none" => Array.fill(p)(1.0)
       case "l1" =>
-        rows.treeAggregate(new Array[Double](p))(
-          { case (acc, (x, _)) =>
-            // sum |x_j - c_j|: centered l1 needs every slot when centered;
-            // if centers are all zero (sparse path) nnz iteration suffices
-            val c = bc.value
-            if (c.forall(_ == 0.0)) x.foreachActive((j, v) => acc(j) += math.abs(v))
-            else { var j = 0; while (j < p) { acc(j) += math.abs(x(j) - c(j)); j += 1 } }
-            acc
-          },
-          { (a1, a2) => var j = 0; while (j < p) { a1(j) += a2(j); j += 1 }; a1 },
-          depth = effDepth)
+        // sum |x_j - c_j|: centered l1 needs every slot; with all-zero
+        // centers (sparse path) nnz iteration suffices
+        val centered = center.exists(_ != 0.0)
+        fold(p, chunked = false) { () => (buf, x, _) =>
+          if (!centered) x.foreachActive((j, v) => buf(j) += math.abs(v))
+          else { var j = 0; while (j < p) { buf(j) += math.abs(x(j) - center(j)); j += 1 } }
+        }
       case "l2" | "sd" | "max" =>
-        // sufficient stats: sumsq, max (centered l2/sd derive from moments)
-        val (sumsq, mx, cnt) = rows.treeAggregate(
-          (new Array[Double](p), Array.fill(p)(Double.NegativeInfinity), 0L))(
-          { case ((sq, mxa, c), (x, _)) =>
-            val ctr = bc.value
-            x.foreachActive { (j, v) => sq(j) += v * v }
-            x match {
-              case d: DenseVector =>
-                var j = 0
-                while (j < p) { if (d.values(j) > mxa(j)) mxa(j) = d.values(j); j += 1 }
-              case s: SparseVector =>
-                // implicit zeros participate in max
-                var j = 0
-                while (j < p) { if (0.0 > mxa(j)) mxa(j) = 0.0; j += 1 }
-                s.foreachActive((j, v) => if (v > mxa(j)) mxa(j) = v)
-            }
-            (sq, mxa, c + 1)
-          },
-          { case ((q1, m1, c1), (q2, m2, c2)) =>
-            var j = 0
-            while (j < p) {
-              q1(j) += q2(j); if (m2(j) > m1(j)) m1(j) = m2(j); j += 1
-            }
-            (q1, m1, c1 + c2)
-          }, depth = effDepth)
+        // buffer: [sumsq(p), rows, max(p)] (centered l2/sd derive from moments)
+        val mx = p + 1
+        val res = fold(2 * p + 1, chunked = false, maxFrom = mx) { () => (buf, x, _) =>
+          x match {
+            case d: DenseVector =>
+              val vs = d.values
+              var j = 0
+              while (j < p) {
+                val v = vs(j); buf(j) += v * v
+                if (v > buf(mx + j)) buf(mx + j) = v
+                j += 1
+              }
+            case s: SparseVector =>
+              // implicit zeros participate in max
+              var j = 0
+              while (j < p) { if (0.0 > buf(mx + j)) buf(mx + j) = 0.0; j += 1 }
+              s.foreachActive { (j, v) =>
+                buf(j) += v * v
+                if (v > buf(mx + j)) buf(mx + j) = v
+              }
+          }
+          buf(p) += 1.0
+        }
+        val cnt = res(p)
         scale match {
           case "l2" =>
-            Array.tabulate(p)(j => math.sqrt(math.max(0.0, sumsq(j) - cnt * center(j) * center(j))))
+            Array.tabulate(p)(j => math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j))))
           case "sd" =>
             Array.tabulate(p)(j =>
-              math.sqrt(math.max(0.0, sumsq(j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
+              math.sqrt(math.max(0.0, res(j) - cnt * center(j) * center(j)) / (cnt - 1.0)))
           case "max" =>
-            Array.tabulate(p)(j => mx(j) - center(j))
+            Array.tabulate(p)(j => res(mx + j) - center(j))
         }
     }
   }
 
   def yMoments(): (Array[Double], Array[Double]) = {
     val mm = m
-    val (sum, sumsq, cnt) = rows.treeAggregate(
-      (new Array[Double](mm), new Array[Double](mm), 0L))(
-      { case ((s, q, c), (_, y)) =>
-        var k = 0; while (k < mm) { s(k) += y(k); q(k) += y(k) * y(k); k += 1 }
-        (s, q, c + 1)
-      },
-      { case ((s1, q1, c1), (s2, q2, c2)) =>
-        var k = 0; while (k < mm) { s1(k) += s2(k); q1(k) += q2(k); k += 1 }
-        (s1, q1, c1 + c2)
-      }, depth = effDepth)
-    val mean = sum.map(_ / cnt)
+    // buffer: [sum(m), sumsq(m), rows]
+    val res = fold(2 * mm + 1, chunked = false) { () => (buf, _, y) =>
+      var k = 0
+      while (k < mm) { buf(k) += y(k); buf(mm + k) += y(k) * y(k); k += 1 }
+      buf(2 * mm) += 1.0
+    }
+    val cnt = res(2 * mm)
+    val mean = Array.tabulate(mm)(k => res(k) / cnt)
     val sd = Array.tabulate(mm)(k =>
-      math.sqrt(math.max(0.0, sumsq(k) / cnt - mean(k) * mean(k))))
+      math.sqrt(math.max(0.0, res(mm + k) / cnt - mean(k) * mean(k))))
     (mean, sd)
   }
 
   def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
                  needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
+    val (_, primal, dual, grad) = evalPass(active, null, betaActive, family, needDual, needGrad)
+    (primal, dual, grad)
+  }
+
+  def evalPairActive(active: Array[Int], candActive: Array[Double],
+                     nextActive: Array[Double], family: Family)
+    : (Double, Double, Double, Array[Double]) =
+    evalPass(active, candActive, nextActive, family, needDual = true, needGrad = true)
+
+  /** The solver pass: primal (+ dual, + gradient) at `next`, and the
+    * primal alone at `cand` unless it is null. */
+  private def evalPass(active: Array[Int], cand: Array[Double], next: Array[Double],
+                       family: Family, needDual: Boolean, needGrad: Boolean)
+    : (Double, Double, Double, Array[Double]) = {
     val a = active.length
     val mm = m
+    val (wc, bc) =
+      if (cand == null) (null, null)
+      else BackendKernels.effectiveWeights(active, cand, mm, pRaw, fitIntercept, xCenter, xScale)
     val (w, b) = BackendKernels.effectiveWeights(
-      active, betaActive, mm, pRaw, fitIntercept, xCenter, xScale)
-    val bcW = sc.broadcast(w)
-    val bcB = sc.broadcast(b)
-    val fi = fitIntercept
-    val bcSlot = sc.broadcast(BackendKernels.slotMap(active, pRaw, fi))
-
-    // buffer: [primal, dual, s0(m), A(a*m)]
-    val bufLen = 2 + mm + (if (needGrad) a * mm else 0)
-    // per-task scratch (r17): linPred/pseudoGradientRow fully overwrite
-    // their outputs, and every task deserializes its own closure copy,
-    // so these arrays are task-private — the two per-ROW allocations
-    // they replace were ~20% of the row kernel at m=1
-    val lp = new Array[Double](mm)
-    val pg = new Array[Double](mm)
-    val result = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        val (x, y) = row
-        BackendKernels.linPred(x, bcW.value, bcB.value, lp)
-        buf(0) += family.primalRow(y, lp)
-        if (needDual) buf(1) += family.dualRow(y, lp)
+      active, next, mm, pRaw, fitIntercept, xCenter, xScale)
+    val slots = BackendKernels.slotMap(active, pRaw, fitIntercept)
+    // buffer: [primal at cand, primal, dual, s0(m), A(a*m)]
+    val res = fold(3 + (if (needGrad) mm + a * mm else 0), chunked = true) { () =>
+      // per-chunk scratch: linPred/pseudoGradientRow fully overwrite
+      // them (per-row allocations were ~20% of the row kernel at m=1)
+      val lp = new Array[Double](mm)
+      val pg = new Array[Double](mm)
+      (buf, x, y) => {
+        if (wc != null) {
+          BackendKernels.linPred(x, wc, bc, lp)
+          buf(0) += family.primalRow(y, lp)
+        }
+        BackendKernels.linPred(x, w, b, lp)
+        buf(1) += family.primalRow(y, lp)
+        if (needDual) buf(2) += family.dualRow(y, lp)
         if (needGrad) {
           family.pseudoGradientRow(y, lp, pg)
           var k = 0
-          while (k < mm) { buf(2 + k) += pg(k); k += 1 }
-          val slots = bcSlot.value
+          while (k < mm) { buf(3 + k) += pg(k); k += 1 }
           x.foreachActive { (j, v) =>
             val slot = slots(j)
             if (slot >= 0) {
               var kk = 0
-              while (kk < mm) { buf(2 + mm + kk * a + slot) += v * pg(kk); kk += 1 }
+              while (kk < mm) { buf(3 + mm + kk * a + slot) += v * pg(kk); kk += 1 }
             }
           }
         }
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
-
-    bcW.destroy(); bcB.destroy(); bcSlot.destroy()
-
+      }
+    }
     val grad = if (needGrad) {
-      val s0 = java.util.Arrays.copyOfRange(result, 2, 2 + mm)
-      val rawA = java.util.Arrays.copyOfRange(result, 2 + mm, bufLen)
-      BackendKernels.standardizeGrad(active, rawA, s0, mm, fi, xCenter, xScale)
+      val s0 = java.util.Arrays.copyOfRange(res, 3, 3 + mm)
+      val rawA = java.util.Arrays.copyOfRange(res, 3 + mm, res.length)
+      BackendKernels.standardizeGrad(active, rawA, s0, mm, fitIntercept, xCenter, xScale)
     } else new Array[Double](0)
-    (result(0), result(1), grad)
-  }
-
-  /** ONE treeAggregate for the speculative FISTA step: candidate primal
-    * + full next-point evaluation share the row scan (the per-pass job
-    * count drops from 2 to 1 — at 100 TB that halves both scheduling
-    * latency AND data I/O for every non-gaussian solver pass). Each
-    * accumulator slot sums exactly the per-row terms the two separate
-    * jobs would; values agree with the composed form up to
-    * treeAggregate's combine-order noise (sub-ULP), the same variance
-    * any two runs of the separate jobs already have. */
-  override def evalPairActive(active: Array[Int], candActive: Array[Double],
-                              nextActive: Array[Double], family: Family)
-    : (Double, Double, Double, Array[Double]) = {
-    val a = active.length
-    val mm = m
-    val (wc, bc) = BackendKernels.effectiveWeights(
-      active, candActive, mm, pRaw, fitIntercept, xCenter, xScale)
-    val (wn, bn) = BackendKernels.effectiveWeights(
-      active, nextActive, mm, pRaw, fitIntercept, xCenter, xScale)
-    val bcWc = sc.broadcast(wc)
-    val bcBc = sc.broadcast(bc)
-    val bcWn = sc.broadcast(wn)
-    val bcBn = sc.broadcast(bn)
-    val fi = fitIntercept
-    val bcSlot = sc.broadcast(BackendKernels.slotMap(active, pRaw, fi))
-
-    // buffer: [gCand, gNext, dualNext, s0(m), A(a*m)]  (grad terms at next)
-    val bufLen = 3 + mm + a * mm
-    // per-task scratch (r17) — see evalActive
-    val lp = new Array[Double](mm)
-    val pg = new Array[Double](mm)
-    val result = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        val (x, y) = row
-        BackendKernels.linPred(x, bcWc.value, bcBc.value, lp)
-        buf(0) += family.primalRow(y, lp)
-        BackendKernels.linPred(x, bcWn.value, bcBn.value, lp)
-        buf(1) += family.primalRow(y, lp)
-        buf(2) += family.dualRow(y, lp)
-        family.pseudoGradientRow(y, lp, pg)
-        var k = 0
-        while (k < mm) { buf(3 + k) += pg(k); k += 1 }
-        val slots = bcSlot.value
-        x.foreachActive { (j, v) =>
-          val slot = slots(j)
-          if (slot >= 0) {
-            var kk = 0
-            while (kk < mm) { buf(3 + mm + kk * a + slot) += v * pg(kk); kk += 1 }
-          }
-        }
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
-
-    bcWc.destroy(); bcBc.destroy(); bcWn.destroy(); bcBn.destroy()
-    bcSlot.destroy()
-
-    val s0 = java.util.Arrays.copyOfRange(result, 3, 3 + mm)
-    val rawA = java.util.Arrays.copyOfRange(result, 3 + mm, bufLen)
-    val grad = BackendKernels.standardizeGrad(active, rawA, s0, mm, fi,
-      xCenter, xScale)
-    (result(0), result(1), result(2), grad)
+    (res(0), res(1), res(2), grad)
   }
 
   def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
     val a = active.length
     val mm = m
-    val bcSlot = sc.broadcast(BackendKernels.slotMap(active, pRaw, fitIntercept))
-    val bufLen = a * a + a + a * mm + mm
-    val res = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        BackendKernels.gramRowUpdate(row._1, row._2, bcSlot.value, buf, a, mm,
-          new Array[Int](a), new Array[Double](a))
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
-    bcSlot.destroy()
+    val slots = BackendKernels.slotMap(active, pRaw, fitIntercept)
+    val res = fold(a * a + a + a * mm + mm, chunked = true) { () =>
+      val tmpSlot = new Array[Int](a)
+      val tmpVal = new Array[Double](a)
+      (buf, x, y) => BackendKernels.gramRowUpdate(x, y, slots, buf, a, mm, tmpSlot, tmpVal)
+    }
     BackendKernels.assembleGram(active, res, a, mm, n, fitIntercept, xCenter, xScale)
   }
 
   def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
     val a = pInt
     val mm = m
-    val p = pRaw
     val fi = fitIntercept
-    val bufLen = a * mm + mm
-    val res = rows.treeAggregate(new Array[Double](bufLen))(
-      { (buf, row) =>
-        val (x, y) = row
-        val v = rowV(y)
-        var k = 0
-        while (k < mm) { buf(a * mm + k) += v(k); k += 1 }
-        x.foreachActive { (j, vx) =>
-          val slot = if (fi) j + 1 else j
-          var kk = 0
-          while (kk < mm) { buf(kk * a + slot) += vx * v(kk); kk += 1 }
-        }
-        buf
-      },
-      { (b1, b2) =>
-        var i = 0; while (i < bufLen) { b1(i) += b2(i); i += 1 }; b1
-      }, depth = effDepth)
+    // buffer: [raw X^T v (a*m), sum v (m)]
+    val res = fold(a * mm + mm, chunked = false) { () => (buf, x, y) =>
+      val v = rowV(y)
+      var k = 0
+      while (k < mm) { buf(a * mm + k) += v(k); k += 1 }
+      x.foreachActive { (j, vx) =>
+        val slot = if (fi) j + 1 else j
+        var kk = 0
+        while (kk < mm) { buf(kk * a + slot) += vx * v(kk); kk += 1 }
+      }
+    }
     val out = new Array[Double](a * mm)
     var k = 0
     while (k < mm) {
@@ -612,189 +486,132 @@ class DistributedBackend(
     }
     out
   }
+}
+
+/** Distributed backend over an RDD of (features, preprocessed labels).
+  * Every pass is ONE Spark job: a shuffle-free map over the partitions
+  * plus a `treeAggregate` of the per-partition accumulators, with the
+  * coefficient state shipped in the task closure — the MLlib pattern
+  * (cf. Spark's `LeastSquaresAggregator`). Designed so a 1000-executor
+  * cluster does one map + tree reduction per solver pass.
+  */
+class DistributedBackend(
+    rowsIn: RDD[(Vector, Array[Double])],
+    val pRaw: Int,
+    val m: Int,
+    val fitIntercept: Boolean,
+    treeDepth: Int = 2,
+    knownN: Long = -1L) extends RowFoldBackend {
+
+  // Size-aware task sizing: every solver pass is ONE job over these
+  // rows, so the pass wall time is (rows-per-task x per-row kernel
+  // cost) + the per-job floor. Two failure modes, both measured on the
+  // bench box (r17 optimization round, guide §2.5):
+  //  - too MANY near-empty tasks: a small fit forced down the
+  //    distributed path pays ~110 ms/job of launch + collection when
+  //    the pass runs 32 near-empty tasks (PERF_DISTRIBUTED.md) —
+  //    COALESCE down to the work-derived width (narrow, no shuffle);
+  //  - too FEW tasks: a sub-128MB parquet scan arrives as 1-3 splits,
+  //    so every one of the path's hundreds of sequential passes ran on
+  //    3 of 32 cores (150-380 ms/pass at sf0.1, QueryProfile r17) —
+  //    REPARTITION up to the same work-derived width (one shuffle of
+  //    the training rows, amortized over every solver pass).
+  // The width derives from WORK (feature cells), never from a core
+  // constant: ~100k cells/task (the exp/log-heavy non-gaussian row
+  // kernels run ~0.25 us/cell, so a task is ~25 ms of compute — a
+  // sweep over {3, 8, 16, 32, 64} widths at sf0.1 put the minimum at
+  // 16-32, OPTIMIZATION_r17.md), capped by the cluster's
+  // defaultParallelism — growing past the core count adds scheduling
+  // overhead with no concurrency. At 100-TB scale cells/100k far
+  // exceeds both the scan layout and the core count, so the policy
+  // only ever coalesces there (the pre-r17 behavior).
+  // Inputs with no prior count (knownN < 0) keep their layout: sizing
+  // is not worth an extra full pass.
+  val rows: RDD[(Vector, Array[Double])] =
+    if (knownN < 0) rowsIn
+    else {
+      val cells = knownN.toDouble * math.max(1, pRaw) * math.max(1, m)
+      val target = math.min(
+        math.max(8, math.ceil(cells / 1e5).toLong),
+        rowsIn.sparkContext.defaultParallelism.toLong).toInt
+      val parts = rowsIn.getNumPartitions
+      if (target == parts) rowsIn
+      else if (target < parts) rowsIn.coalesce(target)
+      // growing costs a full shuffle of the training rows — pay it
+      // only when it at least DOUBLES the pass parallelism (the
+      // 3-split case it exists for), never to fine-tune an already
+      // -wide layout (measured at the 10x frame: repartition 30→32
+      // shuffled ~1 GB to gain 2 tasks and LOST ~6 s to the shuffle
+      // + GC)
+      else if (target >= 2 * parts) rowsIn.repartition(target)
+      else rowsIn
+    }
+
+  rows.persist(StorageLevel.MEMORY_AND_DISK)
+
+  // shallow trees for small fan-in: depth 2 inserts an extra stage per
+  // job; with <= 64 tiny partials the driver combine is faster than a
+  // scheduled intermediate stage
+  private val effDepth =
+    if (rows.getNumPartitions <= 64) 1 else treeDepth
+  // callers that already counted (Slope.fit does, for the backend
+  // decision) pass n in — saves a full scan per fit
+  lazy val n: Long = if (knownN >= 0) knownN else rows.count()
+
+  // treeAggregate over the partition accumulators, not treeReduce:
+  // treeReduce adds two Option-wrapping RDD layers to every job, measured
+  // at ~5 ms more per pass on 4 cores (n = 16,384, p = 20, 4 partitions)
+  protected def fold(len: Int, chunked: Boolean, maxFrom: Int)(
+      newRow: () => RowFn): Array[Double] = {
+    val merge = (a: Array[Double], b: Array[Double]) => BackendKernels.mergeBuf(a, b, maxFrom)
+    rows.mapPartitions { it =>
+      val buf = BackendKernels.zeroBuf(len, maxFrom)
+      val row = newRow()
+      it.foreach { case (x, y) => row(buf, x, y) }
+      Iterator.single(buf)
+    }.treeAggregate(BackendKernels.zeroBuf(len, maxFrom))(merge, merge, effDepth)
+  }
 
   def unpersist(): Unit = rows.unpersist()
 }
 
 /** Local backend over collected rows — used when n*p is driver-sized
-  * (all reference-scale problems). Identical formulas, zero job overhead:
-  * this is what makes the path loop (up to 100 sigma steps x thousands of
-  * FISTA passes) feasible without 10^5 Spark jobs on small data, exactly
-  * mirroring the reference's single-node execution.
+  * (all reference-scale problems). The same passes with zero job
+  * overhead: this is what makes the path loop (up to 100 sigma steps x
+  * thousands of FISTA passes) feasible without 10^5 Spark jobs on small
+  * data, exactly mirroring the reference's single-node execution.
   */
 class LocalBackend(
     val xs: Array[Vector], // raw feature rows
     val ys: Array[Array[Double]],
     val pRaw: Int,
     val m: Int,
-    val fitIntercept: Boolean) extends SlopeBackend {
+    val fitIntercept: Boolean) extends RowFoldBackend {
 
   val n: Long = xs.length.toLong
 
-  private var xCenter: Array[Double] = new Array[Double](pInt)
-  private var xScale: Array[Double] = Array.fill(pInt)(1.0)
-  def setStandardization(c: Array[Double], s: Array[Double]): Unit = {
-    xCenter = c; xScale = s
-  }
-
-  def featureMeansAndSparsity(): (Array[Double], Boolean) = {
-    val sum = new Array[Double](pRaw)
-    var sparse = false
-    var i = 0
-    while (i < xs.length) {
-      xs(i).foreachActive((j, v) => sum(j) += v)
-      sparse ||= xs(i).isInstanceOf[SparseVector]
-      i += 1
-    }
-    (sum.map(_ / n), sparse)
-  }
-
-  def scaleStats(center: Array[Double], scale: String): Array[Double] = {
-    val p = pRaw
-    scale match {
-      case "none" => Array.fill(p)(1.0)
-      case "l1" =>
-        val acc = new Array[Double](p)
-        val centered = center.exists(_ != 0.0)
-        var i = 0
-        while (i < xs.length) {
-          if (!centered) xs(i).foreachActive((j, v) => acc(j) += math.abs(v))
-          else { var j = 0; while (j < p) { acc(j) += math.abs(xs(i)(j) - center(j)); j += 1 } }
-          i += 1
-        }
-        acc
-      case "l2" | "sd" | "max" =>
-        val sumsq = new Array[Double](p)
-        val mx = Array.fill(p)(Double.NegativeInfinity)
-        var i = 0
-        while (i < xs.length) {
-          xs(i) match {
-            case d: DenseVector =>
-              var j = 0
-              while (j < p) {
-                val v = d.values(j); sumsq(j) += v * v
-                if (v > mx(j)) mx(j) = v
-                j += 1
-              }
-            case s: SparseVector =>
-              var j = 0
-              while (j < p) { if (0.0 > mx(j)) mx(j) = 0.0; j += 1 }
-              s.foreachActive { (j, v) => sumsq(j) += v * v; if (v > mx(j)) mx(j) = v }
-          }
-          i += 1
-        }
-        scale match {
-          case "l2" =>
-            Array.tabulate(p)(j => math.sqrt(math.max(0.0, sumsq(j) - n * center(j) * center(j))))
-          case "sd" =>
-            Array.tabulate(p)(j =>
-              math.sqrt(math.max(0.0, sumsq(j) - n * center(j) * center(j)) / (n - 1.0)))
-          case "max" =>
-            Array.tabulate(p)(j => mx(j) - center(j))
-        }
-    }
-  }
-
-  def yMoments(): (Array[Double], Array[Double]) = {
-    val sum = new Array[Double](m)
-    val sumsq = new Array[Double](m)
-    var i = 0
-    while (i < ys.length) {
-      var k = 0
-      while (k < m) { sum(k) += ys(i)(k); sumsq(k) += ys(i)(k) * ys(i)(k); k += 1 }
-      i += 1
-    }
-    val mean = sum.map(_ / n)
-    val sd = Array.tabulate(m)(k => math.sqrt(math.max(0.0, sumsq(k) / n - mean(k) * mean(k))))
-    (mean, sd)
-  }
-
-  /** Split [0, n) into chunks, run `body(chunkBuf, start, end)` in
-    * parallel (common ForkJoin pool), merge the per-chunk buffers. */
-  private def parallelChunks(bufLen: Int)(
-      body: (Array[Double], Int, Int) => Unit): Array[Double] = {
+  /** Split [0, n) into chunks, fold them in parallel (common ForkJoin
+    * pool), merge the per-chunk buffers in chunk order. */
+  protected def fold(len: Int, chunked: Boolean, maxFrom: Int)(
+      newRow: () => RowFn): Array[Double] = {
     val nRows = xs.length
     // fixed chunk count (not availableProcessors): the per-chunk merge
     // order below is already deterministic, and pinning the chunk count
     // makes the FP summation order identical across hosts — required for
     // the golden-file oracle checks to hash-match
-    val nChunks = if (nRows < 16384) 1 else 32
-    if (nChunks == 1) {
-      val buf = new Array[Double](bufLen)
-      body(buf, 0, nRows)
-      buf
-    } else {
-      val bufs = Array.fill(nChunks)(new Array[Double](bufLen))
-      val chunk = (nRows + nChunks - 1) / nChunks
-      java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
-        body(bufs(c), c * chunk, math.min(nRows, (c + 1) * chunk))
-      }
-      val out = bufs(0)
-      var c = 1
-      while (c < nChunks) {
-        val src = bufs(c)
-        var i = 0
-        while (i < bufLen) { out(i) += src(i); i += 1 }
-        c += 1
-      }
-      out
+    val nChunks = if (!chunked || nRows < 16384) 1 else 32
+    val chunk = (nRows + nChunks - 1) / nChunks
+    val bufs = Array.fill(nChunks)(BackendKernels.zeroBuf(len, maxFrom))
+    def run(c: Int): Unit = {
+      val row = newRow()
+      val buf = bufs(c)
+      var i = c * chunk
+      val end = math.min(nRows, (c + 1) * chunk)
+      while (i < end) { row(buf, xs(i), ys(i)); i += 1 }
     }
-  }
-
-  def evalActive(active: Array[Int], betaActive: Array[Double], family: Family,
-                 needDual: Boolean, needGrad: Boolean): (Double, Double, Array[Double]) = {
-    val a = active.length
-    val (w, b) = BackendKernels.effectiveWeights(
-      active, betaActive, m, pRaw, fitIntercept, xCenter, xScale)
-    val slotOf = BackendKernels.slotMap(active, pRaw, fitIntercept)
-    // buffer: [primal, dual, s0(m), rawA(a*m)]
-    val bufLen = 2 + m + a * m
-    val res = parallelChunks(bufLen) { (buf, start, end) =>
-      val lp = new Array[Double](m)
-      val pg = new Array[Double](m)
-      var i = start
-      while (i < end) {
-        val x = xs(i); val y = ys(i)
-        BackendKernels.linPred(x, w, b, lp)
-        buf(0) += family.primalRow(y, lp)
-        if (needDual) buf(1) += family.dualRow(y, lp)
-        if (needGrad) {
-          family.pseudoGradientRow(y, lp, pg)
-          var k = 0
-          while (k < m) { buf(2 + k) += pg(k); k += 1 }
-          x.foreachActive { (j, v) =>
-            val slot = slotOf(j)
-            if (slot >= 0) {
-              var kk = 0
-              while (kk < m) { buf(2 + m + kk * a + slot) += v * pg(kk); kk += 1 }
-            }
-          }
-        }
-        i += 1
-      }
-    }
-    val grad = if (needGrad) {
-      val s0 = java.util.Arrays.copyOfRange(res, 2, 2 + m)
-      val rawA = java.util.Arrays.copyOfRange(res, 2 + m, bufLen)
-      BackendKernels.standardizeGrad(active, rawA, s0, m, fitIntercept, xCenter, xScale)
-    } else new Array[Double](0)
-    (res(0), res(1), grad)
-  }
-
-  def gramXty(active: Array[Int]): (Array[Double], Array[Double]) = {
-    val a = active.length
-    val slotOf = BackendKernels.slotMap(active, pRaw, fitIntercept)
-    val buf = parallelChunks(a * a + a + a * m + m) { (chunkBuf, start, end) =>
-      val tmpSlot = new Array[Int](a)
-      val tmpVal = new Array[Double](a)
-      var i = start
-      while (i < end) {
-        BackendKernels.gramRowUpdate(xs(i), ys(i), slotOf, chunkBuf, a, m,
-          tmpSlot, tmpVal)
-        i += 1
-      }
-    }
-    BackendKernels.assembleGram(active, buf, a, m, n, fitIntercept, xCenter, xScale)
+    if (nChunks == 1) run(0)
+    else java.util.stream.IntStream.range(0, nChunks).parallel().forEach(c => run(c))
+    bufs.reduceLeft(BackendKernels.mergeBuf(_, _, maxFrom))
   }
 
   /** Rows are driver-resident: materialize the standardized active
@@ -824,37 +641,5 @@ class LocalBackend(
       i += 1
     }
     Some((xmat, xty))
-  }
-
-  def xtv(rowV: Array[Double] => Array[Double]): Array[Double] = {
-    val a = pInt
-    val fi = fitIntercept
-    val acc = new Array[Double](a * m)
-    val vSum = new Array[Double](m)
-    var i = 0
-    while (i < xs.length) {
-      val v = rowV(ys(i))
-      var k = 0
-      while (k < m) { vSum(k) += v(k); k += 1 }
-      xs(i).foreachActive { (j, vx) =>
-        val slot = if (fi) j + 1 else j
-        var kk = 0
-        while (kk < m) { acc(kk * a + slot) += vx * v(kk); kk += 1 }
-      }
-      i += 1
-    }
-    val out = new Array[Double](a * m)
-    var k = 0
-    while (k < m) {
-      var r = 0
-      while (r < a) {
-        out(k * a + r) =
-          if (fi && r == 0) vSum(k) / xScale(0)
-          else (acc(k * a + r) - xCenter(r) * vSum(k)) / xScale(r)
-        r += 1
-      }
-      k += 1
-    }
-    out
   }
 }

@@ -2,7 +2,7 @@ package graft.slope
 
 import graft.slope.kernels.{LambdaSequence, Screening}
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{avg, col}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
@@ -40,13 +40,13 @@ case class SlopeParams(
     // ---- Spark execution knobs (not in the reference) ----
     /** Collect to a driver-local backend when n*p is below this; the
       * path loop then runs with zero job-launch overhead. Distributed
-      * treeAggregate passes otherwise. The 40M default is MEASURED,
+      * passes (one Spark job each) otherwise. The 40M default is MEASURED,
       * not guessed (r11 scale gate): at the sf1 CV frame (6M × 7 =
       * 42M, just over the gate) the distributed cells cost 114 s while
       * forcing the local path cost 128-389 s with 7-33 s GC per run —
       * the local backend's per-row boxed label encoding allocates
       * O(cells·n) tiny arrays, so above ~megarow frames the job
-      * overhead of treeAggregate passes is CHEAPER than driver heap
+      * overhead of distributed passes is CHEAPER than driver heap
       * churn. The dist≡local certificates make this dispatch point a
       * pure performance knob; results are identical on either side. */
     localCellLimit: Long = 40L * 1000 * 1000,
@@ -144,9 +144,11 @@ object Slope {
 
   /** The cast projection `fit` consumes: features as Vector or
     * array<double>, label cast per family — ONE definition so
-    * [[collectLocal]] and `fit` can never drift. */
-  private def selectFrame(df: DataFrame, featuresCol: String,
-                          labelCol: String, params: SlopeParams): DataFrame = {
+    * [[collectLocal]], `fit` and `SlopeCv`'s shared collect can never
+    * drift. `extra` columns ride along after `f` and `l`. */
+  private[slope] def selectFrame(df: DataFrame, featuresCol: String,
+                                 labelCol: String, params: SlopeParams,
+                                 extra: Column*): DataFrame = {
     val labelIsClass =
       params.family == "binomial" || params.family == "multinomial"
     val labelIsArray = df.schema(labelCol).dataType.isInstanceOf[ArrayType]
@@ -158,10 +160,10 @@ object Slope {
       if (labelIsClass) col(labelCol).cast(StringType)
       else if (labelIsArray) col(labelCol).cast(ArrayType(DoubleType))
       else col(labelCol).cast(DoubleType)
-    df.select(featExpr.as("f"), labExpr.as("l"))
+    df.select(featExpr.as("f") +: labExpr.as("l") +: extra: _*)
   }
 
-  private def toVec(a: Any): Vector = a match {
+  private[slope] def toVec(a: Any): Vector = a match {
     case v: Vector => v
     case s: scala.collection.Seq[_] =>
       Vectors.dense(s.map(_.asInstanceOf[Double]).toArray)

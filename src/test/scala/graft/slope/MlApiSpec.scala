@@ -173,36 +173,102 @@ class MlApiSpec extends AnyFunSuite {
     }
   }
 
-  test("fused evalPairActive == composed primal + eval (distributed)") {
-    import org.apache.spark.ml.linalg.Vectors
-    import org.apache.spark.storage.StorageLevel
-    val rng = new scala.util.Random(41)
-    val n = 300; val p = 4
-    val rows = Array.fill(n)((
-      Vectors.dense(Array.fill(p)(rng.nextGaussian())).asInstanceOf[org.apache.spark.ml.linalg.Vector],
-      Array(if (rng.nextBoolean()) 1.0 else -1.0)))
-    val rdd = spark.sparkContext.parallelize(rows.toSeq, 4)
-    val backend = new DistributedBackend(rdd, p, 1, true, knownN = n)
-    try {
-      backend.setStandardization(new Array[Double](p + 1),
-        Array.fill(p + 1)(1.0))
-      val active = (0 to p).toArray
-      val cand = Array.tabulate(p + 1)(j => 0.1 * (j + 1))
-      val next = Array.tabulate(p + 1)(j => -0.05 * (j + 1))
-      val fam = Family("binomial")
-      val (gc, gn, dn, grn) = backend.evalPairActive(active, cand, next, fam)
-      // identical per-row terms; only treeAggregate's combine order can
-      // differ between runs (task completion races), so compare to
-      // relative ULP-scale tolerance — the same bound two separate
-      // primalActive calls satisfy against each other
-      def close(x: Double, y: Double): Boolean =
-        math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(y))
-      assert(close(gc, backend.primalActive(active, cand, fam)))
-      val (g2, d2, gr2) = backend.evalActive(active, next, fam,
-        needDual = true, needGrad = true)
-      assert(close(gn, g2) && close(dn, d2))
-      assert(grn.indices.forall(i => close(grn(i), gr2(i))))
-    } finally backend.unpersist()
+  // LocalBackend folds the solver passes in one chunk below 16,384 rows
+  // and in 32 fixed chunks above; both fold orders are deterministic, so
+  // the fused pass must equal the composed one exactly. Only
+  // treeAggregate's driver combine follows task completion, so the
+  // distributed backend keeps a relative ULP-scale bound — the same
+  // bound two separate primalActive calls satisfy against each other.
+  for ((label, n, distributed) <- Seq(
+         ("distributed", 300, true),
+         ("local, one chunk", 300, false),
+         ("local, 32 chunks", 16500, false)))
+    test(s"fused evalPairActive == composed primal + eval ($label)") {
+      import org.apache.spark.ml.linalg.{Vector, Vectors}
+      val rng = new scala.util.Random(41)
+      val p = 4
+      val rows = Array.fill(n)((
+        Vectors.dense(Array.fill(p)(rng.nextGaussian())): Vector,
+        Array(if (rng.nextBoolean()) 1.0 else -1.0)))
+      val backend: RowFoldBackend =
+        if (distributed)
+          new DistributedBackend(spark.sparkContext.parallelize(rows.toSeq, 4), p, 1,
+            true, knownN = n)
+        else new LocalBackend(rows.map(_._1), rows.map(_._2), p, 1, true)
+      try {
+        backend.setStandardization(new Array[Double](p + 1),
+          Array.fill(p + 1)(1.0))
+        val active = (0 to p).toArray
+        val cand = Array.tabulate(p + 1)(j => 0.1 * (j + 1))
+        val next = Array.tabulate(p + 1)(j => -0.05 * (j + 1))
+        val fam = Family("binomial")
+        val (gc, gn, dn, grn) = backend.evalPairActive(active, cand, next, fam)
+        def same(x: Double, y: Double): Boolean =
+          if (distributed) math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(y))
+          else x == y
+        assert(same(gc, backend.primalActive(active, cand, fam)))
+        val (g2, d2, gr2) = backend.evalActive(active, next, fam,
+          needDual = true, needGrad = true)
+        assert(same(gn, g2) && same(dn, d2))
+        assert(grn.length == gr2.length && grn.indices.forall(i => same(grn(i), gr2(i))))
+      } finally backend match {
+        case d: DistributedBackend => d.unpersist()
+        case _ =>
+      }
+    }
+
+  test("set-up passes agree across backends: every scale mode, centered or not, dense or sparse") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val rng = new scala.util.Random(53)
+    val n = 240; val p = 5; val m = 2
+    // about half the cells are zero; column 0 is never positive, so its
+    // max comes from a zero (implicit in the sparse rows)
+    val dense = Array.fill(n)(Array.tabulate(p) { j =>
+      if (rng.nextBoolean()) 0.0
+      else if (j == 0) -math.abs(rng.nextGaussian()) - 0.1
+      else rng.nextGaussian() + j
+    })
+    val ys = Array.fill(n)(Array.fill(m)(rng.nextGaussian()))
+    def close(x: Array[Double], y: Array[Double]): Boolean =
+      x.length == y.length && x.indices.forall(i =>
+        math.abs(x(i) - y(i)) <= 1e-12 * math.max(1.0, math.abs(y(i))))
+    val rowV = (y: Array[Double]) => Array(y(0) - 0.5, 2.0 * y(1))
+    for (sparse <- Seq(false, true)) {
+      val xs: Array[Vector] = dense.map { r =>
+        val v = Vectors.dense(r); if (sparse) v.toSparse else v
+      }
+      val local = new LocalBackend(xs, ys, p, m, true)
+      val dist = new DistributedBackend(
+        spark.sparkContext.parallelize(xs.toSeq.zip(ys.toSeq), 4), p, m, true, knownN = n)
+      try {
+        val (meanL, sparseL) = local.featureMeansAndSparsity()
+        val (meanD, sparseD) = dist.featureMeansAndSparsity()
+        assert(sparseL == sparse && sparseD == sparse)
+        assert(close(meanL, meanD))
+        assert(close(meanL, Array.tabulate(p)(j => dense.map(_(j)).sum / n)))
+        val (yMeanL, ySdL) = local.yMoments()
+        val (yMeanD, ySdD) = dist.yMoments()
+        assert(close(yMeanL, yMeanD) && close(ySdL, ySdD))
+        for (centered <- Seq(false, true); scale <- Seq("l1", "l2", "sd", "max", "none")) {
+          val clue = s"sparse=$sparse centered=$centered scale=$scale"
+          val center = if (centered) meanL else new Array[Double](p)
+          val sL = local.scaleStats(center, scale)
+          assert(close(sL, dist.scaleStats(center, scale)), clue)
+          val direct = scale match {
+            case "l1" => Array.tabulate(p)(j => dense.map(r => math.abs(r(j) - center(j))).sum)
+            case "max" => Array.tabulate(p)(j => dense.map(_(j)).max - center(j))
+            case _ => sL
+          }
+          assert(close(sL, direct), clue)
+          if (scale == "max") assert(sL(0) == -center(0), clue)
+          val c = 0.0 +: center
+          val s = math.sqrt(n.toDouble) +: sL.map(v => if (v == 0.0) 1.0 else v)
+          local.setStandardization(c, s)
+          dist.setStandardization(c, s)
+          assert(close(local.xtv(rowV), dist.xtv(rowV)), clue)
+        }
+      } finally dist.unpersist()
+    }
   }
 
   test("distributed backend binomial == local binomial") {
